@@ -29,7 +29,9 @@ from .ledger import JobLedger
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 SMALL_FILE_RATIO = 0.75
 # positional-delete ratio at which a file is rewritten regardless of size
-# (Iceberg rewrite_data_files delete-ratio default)
+# (Iceberg rewrite_data_files delete-ratio default). Until then every scan
+# drops the file's deleted rows: by an in-scan filter while the read's DVs
+# hold at most DV_INLINE_POSITIONS positions, by an anti-join above it
 DELETE_RATIO = 0.3
 
 
@@ -61,7 +63,8 @@ def plan_compaction(
     Besides small files, any file whose merge-on-read positional-delete
     ratio reaches ``delete_ratio`` is a candidate REGARDLESS of size
     (Iceberg rewrite_data_files' delete-threshold analog): every scan pays
-    the file's DV anti-join until a rewrite materializes the deletes, so
+    to drop the file's deleted rows (DV filter or anti-join) until a
+    rewrite materializes the deletes, so
     delete-heavy files earn a rewrite on their own — they may form
     single-file bins, exempt from ``min_bin_files``. The ratio comes from
     the delete registry (driver-side metadata; no data read).

@@ -102,7 +102,7 @@ class MaintenanceLoop:
         if self.maintain_deletes:
             # delete-stack upkeep rides the same cadence: consolidate DV
             # sidecars once they pile up and fold equality deletes into
-            # positional form so steady-state reads stay one anti-join
+            # positional form so steady-state reads keep one DV step
             from .rewrite_deletes import rewrite_delete_vectors
 
             full = self.table.delete_registry_full()

@@ -2,11 +2,13 @@
 (Iceberg's ``rewrite_position_delete_files`` action).
 
 Every ``delete_where`` commit adds sidecar files; a table taking frequent
-point deletes accumulates many tiny DVs and every read's anti-join side
-grows by one file per delete. This job consolidates all live positions
-into fresh sidecars (deduplicated — stacked deletes may overlap), rewrites
-the registry, and commits atomically; the old sidecars become unreferenced
-and snapshot expiry sweeps them.
+point deletes accumulates many tiny DVs, and every read opens one more
+sidecar per delete (on the driver for the in-scan filter below
+``DV_INLINE_POSITIONS`` positions, in the anti-join's scan above it). This
+job consolidates all live positions into fresh sidecars (deduplicated —
+stacked deletes may overlap), rewrites the registry, and commits
+atomically; the old sidecars become unreferenced and snapshot expiry
+sweeps them.
 
 It also CONVERTS live equality deletes to positional form (VERDICT r03
 #4): each ``delete_by_key`` adds one anti-join per key column to every
@@ -15,8 +17,9 @@ between maintenance runs grows its read plan linearly. Conversion scans
 ONLY the key column of the applicable files (added_by <= the entry's
 seq — later appends are immune by the sequence contract), records the
 matching (file, position) pairs as ordinary DV positions, and drops the
-eq entries in the same commit — steady-state reads go back to exactly one
-anti-join regardless of how many key deletes accumulated.
+eq entries in the same commit — steady-state reads go back to the one
+positional DV step (in-scan filter or anti-join) regardless of how many
+key deletes accumulated.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..table.format import IcehouseTable, Snapshot
+from ..table.format import DV_BROADCAST_ROWS, IcehouseTable, Snapshot
 from ..table.stats import file_stats
 
 
@@ -70,7 +73,7 @@ def _eq_positions(table: IcehouseTable, live, eq_entries: list[dict]) -> DataFra
                 F.lit(e["seq"]).cast("long").alias("__eseq"),
             )
             keys = one if keys is None else keys.unionByName(one)
-        if sum(e["rows"] for e in group) <= 1_000_000:
+        if sum(e["rows"] for e in group) <= DV_BROADCAST_ROWS:
             keys = F.broadcast(keys)
         hit = df.join(
             keys,

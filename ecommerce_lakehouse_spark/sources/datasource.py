@@ -510,6 +510,8 @@ def _read_partition_arrow(partition, schema: StructType):
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from ..table.format import read_dv_positions
+
     want = to_arrow_schema(schema)
     if partition is None or partition.path is None:
         # every file was stats-pruned: an empty result, typed correctly
@@ -534,16 +536,12 @@ def _read_partition_arrow(partition, schema: StructType):
     if getattr(partition, "dv_paths", None):
         # merge-on-read: drop this file's deleted row positions
         fname = os.path.basename(partition.path)
-        dv = pq.read_table(partition.dv_paths, columns=["fname", "pos"])
-        dv = dv.filter(pc.equal(dv.column("fname"), fname))
-        if dv.num_rows:
+        pos = read_dv_positions(partition.dv_paths, {fname}).get(fname)
+        if pos is not None:
             # vectorized keep-mask: positions-index is_in, no O(rows)
             # Python loop on the read path (VERDICT r03 #2)
             idx = pa.array(np.arange(tbl.num_rows, dtype=np.int64))
-            keep = pc.invert(
-                pc.is_in(idx, value_set=dv.column("pos").cast(pa.int64()))
-            )
-            tbl = tbl.filter(keep)
+            tbl = tbl.filter(pc.invert(pc.is_in(idx, value_set=pa.array(pos))))
     rev = {n_: cur for cur, grp in name_group.items() for n_ in grp}
     for eq_path, key_col in getattr(partition, "eq_deletes", []) or []:
         # equality deletes applicable to this file's commit sequence; the

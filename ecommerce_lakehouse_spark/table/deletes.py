@@ -6,16 +6,19 @@ affected file — at a 100-TB table a GDPR-style deletion of a handful of
 rows would rewrite gigabytes. ``delete_where`` instead writes DELETION
 VECTORS: parquet sidecars of (file, row_index) positions, registered per
 data file in a snapshot-scoped delete registry
-(``manifests/deletes-*.json``). Reads apply them as one anti-join
-(:meth:`IcehouseTable.read_files`); rewrites (MERGE / compaction /
-clustering) read through the same primitive, so when a rewrite replaces a
-file its registry entry is dropped in the SAME commit — the deletes are
-materialized, never resurrected.
+(``manifests/deletes-*.json``). Reads apply them in
+:meth:`IcehouseTable.read_files`: up to ``DV_INLINE_POSITIONS`` registered
+positions as one in-scan row filter (positions read on the driver, no join
+and no extra Spark job), above it as an anti-join against the sidecars
+(broadcast up to ``DV_BROADCAST_ROWS``, shuffled above). Rewrites (MERGE /
+compaction / clustering) read through the same primitive, so when a
+rewrite replaces a file its registry entry is dropped in the SAME commit —
+the deletes are materialized, never resurrected.
 
 Scale shape: the position scan reads only stats-pruned candidate files and
 prunes columns to the predicate columns + hidden ``_metadata`` (the html
-payload is never read); the DV sidecars are tiny and counted-broadcast on
-read. Files whose stats PROVE every row matches (a whole day under a
+payload is never read); the registry's row counts pick the read form with
+no data read. Files whose stats PROVE every row matches (a whole day under a
 day(warc_ts) partition spec, a whole url prefix under Z-order) skip rows
 entirely: they are dropped from the manifest in the same commit —
 Iceberg's metadata-only DELETE / partition-drop path, O(metadata) at any

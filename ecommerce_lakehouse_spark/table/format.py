@@ -105,6 +105,66 @@ ROW_ID = "_row_id"
 ROW_LINEAGE_PROP = "row-lineage"
 NEXT_ROW_ID_KEY = "next-row-id"
 
+# -------------------------------------------------------- deletion vectors
+# read_files drops the positional deletes of a read by an in-scan filter
+# while they hold at most DV_INLINE_POSITIONS positions, and by an anti-join
+# above it: broadcast up to DV_BROADCAST_ROWS sidecar rows (the cutoff for
+# equality-delete key sidecars too), shuffled above. Inline planning grows
+# ~10 µs per position (analysis and optimizer walk the IN lists), so the cap
+# sits at the smaller table's crossover: scan + count/sum aggregate, plan
+# and execute, median of 10, local[4] (BENCH/dv_inline_crossover.py):
+#   20k rows / 20 files: inline 0.20 vs anti-join 0.30 s at 100 positions,
+#     0.21 vs 0.25 s at 3k, 0.23 vs 0.23 s at 5k, 0.28 vs 0.22 s at 10k;
+#   2M rows / 8 files: 0.30 vs 0.49 s at 3k, 0.42 vs 0.46 s at 10k,
+#     0.87 vs 0.49 s at 30k.
+DV_INLINE_POSITIONS = 5_000
+DV_BROADCAST_ROWS = 1_000_000
+
+
+def read_dv_positions(paths: list[str], fnames) -> dict:
+    """{data-file basename: sorted int64 numpy array of deleted positions}
+    that the DV sidecars ``paths`` hold for the files named ``fnames``.
+
+    The one pyarrow reader of sidecar contents (driver-side for inline DV
+    filters and the commit race check, executor-side in the DSv2 read
+    kernel). A missing sidecar raises ``FileNotFoundError``: a read never
+    shows rows a delete hid."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    if not paths or not fnames:
+        return {}
+    t = pq.read_table(list(paths), columns=["fname", "pos"],
+                      filters=[("fname", "in", sorted(fnames))])
+    g = t.group_by("fname").aggregate([("pos", "distinct")])
+    return {
+        f: np.sort(pos.values.to_numpy().astype(np.int64))
+        for f, pos in zip(g["fname"].to_pylist(), g["pos_distinct"])
+    }
+
+
+def _dv_keep_sql(positions: dict) -> str:
+    """SQL predicate over ``__fname``/``__pos`` that keeps every row except
+    ``positions`` ({fname: positions}). The per-file terms
+    ``(__fname = 'f' AND __pos IN (…))`` hang off a binary search on the
+    file name, so the tree is log2(files) deep and a row evaluates that
+    many string compares, not one per file."""
+    def q(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    def node(items: list) -> str:
+        if len(items) == 1:
+            f, pos = items[0]
+            # bigint literals (``L``): int ones would each get a cast to
+            # __pos's type, doubling analysis and optimizer work
+            return (f"(__fname = {q(f)} AND __pos IN "
+                    f"({','.join(f'{p}L' for p in pos.tolist())}))")
+        mid = len(items) // 2
+        return (f"IF(__fname < {q(items[mid][0])}, "
+                f"{node(items[:mid])}, {node(items[mid:])})")
+
+    return f"NOT {node(sorted(positions.items()))}"
+
 
 def _sketch_b64(positions) -> str:
     import base64
@@ -674,20 +734,17 @@ class IcehouseTable:
         entries whose shallow dict compare already differed."""
         if not entry:
             return frozenset()
-        import pyarrow.parquet as pq
-
         fname = os.path.basename(data_rel)
-        pos: set = set()
-        for rel in entry.get("dvs", []):
-            p = os.path.join(self.path, rel)
-            if not os.path.exists(p):
-                # sidecar already swept: contents unknowable — return a
-                # sentinel no other set equals, forcing the conflict path
-                return frozenset({object()})
-            t = pq.read_table(p, columns=["fname", "pos"],
-                              filters=[("fname", "=", fname)])
-            pos.update(t["pos"].to_pylist())
-        return frozenset(pos)
+        try:
+            pos = read_dv_positions(
+                [os.path.join(self.path, r) for r in entry.get("dvs", [])],
+                {fname},
+            ).get(fname)
+        except FileNotFoundError:
+            # sidecar already swept: contents unknowable — return a
+            # sentinel no other set equals, forcing the conflict path
+            return frozenset({object()})
+        return frozenset() if pos is None else frozenset(pos.tolist())
 
     def _write_delete_registry(
         self, entries: dict, eq: list[dict] | None = None
@@ -711,13 +768,16 @@ class IcehouseTable:
     ) -> DataFrame:
         """Read the given data files with the snapshot's DELETION VECTORS
         applied (merge-on-read): rows whose (file, row_index) appear in a DV
-        are anti-joined away. This is the one read primitive every rewrite
-        (MERGE, compaction, clustering) and scan goes through, so deleted
-        rows can never be resurrected by a rewrite.
+        are dropped. This is the one read primitive every rewrite (MERGE,
+        compaction, clustering) and scan goes through, so deleted rows can
+        never be resurrected by a rewrite.
 
         ``with_pos=True`` keeps the ``__fname``/``__pos`` provenance columns
-        (used by delete_where itself). The DV side is counted-broadcast:
-        registry row counts decide broadcast vs shuffle anti-join.
+        (used by delete_where itself). Registry row counts pick the DV form:
+        up to ``DV_INLINE_POSITIONS`` positions are read on the driver and
+        dropped by one in-scan filter on the provenance columns (no sidecar
+        scan, no join, no extra job); above it the sidecars are anti-joined,
+        broadcast up to ``DV_BROADCAST_ROWS`` rows and shuffled above.
 
         ``with_row_id=True`` appends the stable ``_row_id`` column:
         ``coalesce(<materialized _row_id>, first_row_id + position)`` — the
@@ -780,8 +840,7 @@ class IcehouseTable:
         )
         if need_prov:
             df = df.withColumn(
-                "__fname",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+                "__fname", F.col("_metadata.file_name")
             ).withColumn("__pos", F.col("_metadata.row_index"))
         df = self.alias_resolve(df, aliases)
         if with_row_id:
@@ -797,17 +856,27 @@ class IcehouseTable:
                 F.coalesce(F.col(ROW_ID), F.col("__frid") + F.col("__pos")),
             ).drop("__rid_fn", "__frid")
         if dv_rels:
-            dv = self.spark.read.parquet(
-                *[os.path.join(self.path, r) for r in dv_rels]
-            ).select("fname", "pos")
+            dv_paths = [os.path.join(self.path, r) for r in dv_rels]
+            # registered rows of every file sharing a sidecar with this read:
+            # the size of both the driver-side read and the broadcast side
             n_dv_rows = sum(
                 e["rows"] for rel, e in reg.items()
                 if set(e["dvs"]) & set(dv_rels)
             )
-            if n_dv_rows <= 1_000_000:
-                dv = F.broadcast(dv)
-            cond = (df["__fname"] == dv["fname"]) & (df["__pos"] == dv["pos"])
-            df = df.join(dv, cond, "left_anti")
+            if n_dv_rows <= DV_INLINE_POSITIONS:
+                positions = read_dv_positions(
+                    dv_paths, {os.path.basename(p) for p in wanted}
+                )
+                if positions:
+                    df = df.filter(F.expr(_dv_keep_sql(positions)))
+            else:
+                dv = self.spark.read.parquet(*dv_paths).select("fname", "pos")
+                if n_dv_rows <= DV_BROADCAST_ROWS:
+                    dv = F.broadcast(dv)
+                cond = (
+                    (df["__fname"] == dv["fname"]) & (df["__pos"] == dv["pos"])
+                )
+                df = df.join(dv, cond, "left_anti")
         if eq or defaults:
             # rows inherit their file's commit sequence via a tiny broadcast
             # (fname -> added_by): eq deletes apply when the row's file
@@ -853,7 +922,7 @@ class IcehouseTable:
                         F.lit(e["seq"]).cast("long").alias("__eseq"),
                     )
                     keys = one if keys is None else keys.unionByName(one)
-                if sum(e["rows"] for e in group) <= 1_000_000:
+                if sum(e["rows"] for e in group) <= DV_BROADCAST_ROWS:
                     keys = F.broadcast(keys)
                 df = df.join(
                     keys,
